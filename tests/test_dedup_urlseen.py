@@ -147,6 +147,22 @@ def test_bloom_pre_screen_no_false_negatives(spark, workdir):
     assert man["items"] == 2000 and man["rounds"][0]["batch_id"] == "r0"
 
 
+def test_bloom_no_false_negatives_past_capacity(spark, workdir):
+    """Six times a partition's sized capacity: the false-positive rate
+    may degrade, but every merged key must still probe maybe_seen —
+    updatedb sends maybe_seen=False keys around the frontier anti-join
+    as definitely new."""
+    bloom = BloomUrlSeen(f"{workdir}/bloom_full", partitions=1,
+                         capacity_per_partition=1_000, fp_rate=0.01)
+    seen = spark.createDataFrame(
+        pd.DataFrame({"k": [f"hash-{i:05d}" for i in range(6000)]})
+    )
+    bloom.merge_round(seen, "k", "r0")
+    out = bloom.maybe_seen(seen, "k").toPandas()
+    assert len(out) == 6000
+    assert out.maybe_seen.all()
+
+
 def test_bloom_incremental_merge(spark, workdir):
     bloom = BloomUrlSeen(f"{workdir}/bloom2", partitions=2,
                          capacity_per_partition=1_000, fp_rate=0.01)

@@ -4,6 +4,7 @@ politeness, and kill-and-resume identity (FIXTURES.md §6)."""
 
 import os
 import shutil
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -139,6 +140,13 @@ def test_payload_invariants(crawl_state):
         assert px.shape == (row["h"], row["w"], 3)
         assert codec.decode_caption(bytes(row["bytes"])) == row["caption"]
         assert codec.phash(px) == row["phash"]
+    # the payload bytes persist once, in the fetch artifact: no
+    # committed parse artifact carries its own copy
+    batches = sorted(os.listdir(os.path.join(crawl_state["wd"], "rounds")))
+    assert len(batches) == 3
+    for batch_id in batches:
+        assert drv._done(batch_id, "parse")
+        assert "bytes" not in drv._read_stage(batch_id, "parse").columns
 
 
 def test_frontier_grows_and_marks_cleared(crawl_state):
@@ -191,3 +199,39 @@ def test_kill_and_resume_identical_state(spark, tmp_path_factory):
     assert (a.status == b.status).all()
     assert (a.distance == b.distance).all()
     assert ((a.score - b.score).abs() < 1e-3).all()
+
+
+@pytest.mark.parametrize("parallelism", [1, 8])
+def test_run_overlapped_reports_every_failure(parallelism):
+    """Both the sequential (< 4 cores) and the pooled branch run every
+    action, then raise all failures together."""
+    fake = SimpleNamespace(
+        spark=SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=parallelism)
+        )
+    )
+    ran = []
+
+    def fail_a():
+        ran.append("a")
+        raise ValueError("a failed")
+
+    def ok():
+        ran.append("ok")
+
+    def fail_b():
+        ran.append("b")
+        raise KeyError("b failed")
+
+    with pytest.raises(BaseExceptionGroup) as info:
+        RoundDriver._run_overlapped(fake, fail_a, ok, fail_b)
+    assert sorted(ran) == ["a", "b", "ok"]
+    errors = info.value.exceptions
+    assert len(errors) == 2
+    assert {type(e) for e in errors} == {ValueError, KeyError}
+
+    # a single failure propagates unchanged, not wrapped in a group
+    ran.clear()
+    with pytest.raises(ValueError, match="a failed"):
+        RoundDriver._run_overlapped(fake, ok, fail_a)
+    assert sorted(ran) == ["a", "ok"]

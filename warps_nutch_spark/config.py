@@ -159,13 +159,7 @@ class CrawlConfig:
     # salt factor for payload-parallel stages (never the politeness UDF)
     salt_factor: int = 8
 
-    # --- URL-seen filter (north_rule: "Bloom/cuckoo") -------------------
-    # "bloom" (default): OR-mergeable bitmaps, naturally idempotent,
-    # cannot delete. "cuckoo": fingerprint table supporting true
-    # deletion (store/cuckoo.py) — pair with frontier equality deletes
-    # so a deleted URL's pre-screen recovers instead of answering
-    # maybe_seen forever.
-    urlseen_backend: str = "bloom"
+    # --- URL-seen Bloom filter (store/urlseen.py) -----------------------
     bloom_partitions: int = 32
     bloom_capacity_per_partition: int = 1_000_000
     bloom_fp_rate: float = 0.01

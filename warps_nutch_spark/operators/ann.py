@@ -55,77 +55,24 @@ def norm_col(c: Column) -> Column:
     )
 
 
-# --- unrolled fixed-dimension variants (DISABLED after measurement) --------
-# Hypothesis tested in r6: unrolling the fold into a flat 64-term
-# element_at chain ((0.0 + a1*b1) + a2*b2) + ... would beat the
-# aggregate/zip_with higher-order form. A/B on 2M 64-dim rows measured
-# the OPPOSITE — unrolled 8.7-11.1 s vs HOF 1.7-5.0 s (the wide
-# element_at tree defeats codegen; the HOF loop is a tight specialized
-# evaluator). _MAX_UNROLL_DIM = 0 keeps every dot/norm on the HOF form
-# while preserving the call sites; dim_of short-circuits to None so no
-# probe job runs. The REAL wins for the scorers were structural: norms
-# hoisted to one-per-row below the joins, and candidate stages spread
-# across cores (skew.spread) instead of AQE-coalesced to 1 task.
-_MAX_UNROLL_DIM = 0
-
-
-def dim_of(df: DataFrame, col: str = "embedding") -> int | None:
-    """Vector dimensionality sampled from the first row (None when the
-    table is empty or the probe fails); used only to pick the unrolled
-    expression form — never to change results."""
-    if _MAX_UNROLL_DIM <= 0:
-        return None
-    try:
-        row = df.select(F.size(F.col(col)).alias("d")).head()
-        d = int(row["d"]) if row is not None and row["d"] is not None else None
-        return d if d is not None and 0 < d <= _MAX_UNROLL_DIM else None
-    except Exception:
-        return None
-
-
-def dot_col_d(a: Column, b: Column, d: int | None) -> Column:
-    if d is None:
-        return dot_col(a, b)
-    acc: Column = F.lit(0.0)
-    for i in range(1, d + 1):
-        acc = acc + F.element_at(a, i).cast("double") * F.element_at(b, i).cast(
-            "double"
-        )
-    return acc
-
-
-def norm_col_d(c: Column, d: int | None) -> Column:
-    if d is None:
-        return norm_col(c)
-    acc: Column = F.lit(0.0)
-    for i in range(1, d + 1):
-        acc = acc + F.element_at(c, i).cast("double") * F.element_at(c, i).cast(
-            "double"
-        )
-    return F.sqrt(acc)
-
-
 def cosine_col(a: Column, b: Column) -> Column:
     return dot_col(a, b) / (norm_col(a) * norm_col(b))
 
 
 def brute_force_topk(
-    emb: DataFrame, query: DataFrame, k: int, id_col: str = "vec_id",
-    d: int | None = None,
+    emb: DataFrame, query: DataFrame, k: int, id_col: str = "vec_id"
 ) -> DataFrame:
     """Exact top-k by cosine against a single broadcast query vector
     (column ``qe``). orderBy().limit() compiles to
     TakeOrderedAndProject — per-partition partial top-k, no global
-    sort shuffle. ``d``: vector dimension for the unrolled codegen
-    scorer (callers composing over derived plans pass it explicitly so
-    no probe job runs against the composed plan)."""
+    sort shuffle."""
     # query norm evaluated once on the (1-row) broadcast side, not per
     # corpus row (guide §2.3: hoist invariant work out of the hot path;
     # cos = dot/(norm_a*norm_q) is the same expression tree factored)
-    q = query.withColumn("_bf_nq", norm_col_d(F.col("qe"), d))
+    q = query.withColumn("_bf_nq", norm_col(F.col("qe")))
     joined = spread_narrow_scan(emb).crossJoin(F.broadcast(q))
-    cos = dot_col_d(F.col("embedding"), F.col("qe"), d) / (
-        norm_col_d(F.col("embedding"), d) * F.col("_bf_nq")
+    cos = dot_col(F.col("embedding"), F.col("qe")) / (
+        norm_col(F.col("embedding")) * F.col("_bf_nq")
     )
     return (
         joined.select(id_col, F.round(cos, 4).alias("cosine"))
@@ -388,10 +335,6 @@ def cosine_verify_pairs(
     threshold. Filter runs on the unrounded double (identical IEEE
     math in Spark and DuckDB over the same float32 inputs); the output
     rounds to 4 decimals for hash stability."""
-    # norms evaluated once per vector row below the pair join: the
-    # verify then costs one dot per candidate pair instead of
-    # dot + 2 norms (cos = dot/(n_a*n_b), the same tree factored)
-    d = dim_of(emb)
     # pin the verify's parallelism: the pair stream is 16 B/row but the
     # downstream dot is dense, and AQE byte-coalescing would serialize
     # it; an explicit spread exchange of two longs per row is free
@@ -399,15 +342,18 @@ def cosine_verify_pairs(
     fast = _verify_pairs_by_id(emb, pairs, threshold, id_col)
     if fast is not None:
         return fast
+    # norms evaluated once per vector row below the pair join: the
+    # verify then costs one dot per candidate pair instead of
+    # dot + 2 norms (cos = dot/(n_a*n_b), the same tree factored)
     ea = emb.select(
         F.col(id_col).alias("id_a"),
         F.col("embedding").alias("emb_a"),
-        norm_col_d(F.col("embedding"), d).alias("_na"),
+        norm_col(F.col("embedding")).alias("_na"),
     )
     eb = emb.select(
         F.col(id_col).alias("id_b"),
         F.col("embedding").alias("emb_b"),
-        norm_col_d(F.col("embedding"), d).alias("_nb"),
+        norm_col(F.col("embedding")).alias("_nb"),
     )
     joined = pairs.join(ea, on="id_a").join(eb, on="id_b")
     # batch-native dot via the shared mapInArrow kernel (bit-exact with
@@ -467,8 +413,7 @@ def lsh_cosine_dedup(
 
 
 def ivf_assign(
-    emb: DataFrame, centroids: DataFrame, id_col: str = "vec_id",
-    d: int | None = None,
+    emb: DataFrame, centroids: DataFrame, id_col: str = "vec_id"
 ) -> DataFrame:
     """(id, centroid_id): assign each vector to its nearest centroid
     by cosine (IVF coarse quantizer). Centroids (``centroid_id``,
@@ -477,11 +422,11 @@ def ivf_assign(
     probes prune partitions."""
     # centroid norms evaluated once on the broadcast side (K rows), and
     # the row's own norm once per row instead of once per (row, centroid)
-    cent = centroids.withColumn("_nc", norm_col_d(F.col("ce"), d))
+    cent = centroids.withColumn("_nc", norm_col(F.col("ce")))
     joined = spread_narrow_scan(emb).withColumn(
-        "_ne", norm_col_d(F.col("embedding"), d)
+        "_ne", norm_col(F.col("embedding"))
     ).crossJoin(F.broadcast(cent))
-    cos = dot_col_d(F.col("embedding"), F.col("ce"), d) / (
+    cos = dot_col(F.col("embedding"), F.col("ce")) / (
         F.col("_ne") * F.col("_nc")
     )
     # argmax as a map-side-combinable aggregate instead of a
@@ -517,7 +462,6 @@ def ivf_topk(
     candidate scan is ``n_probe / n_centroids`` of the corpus, and with
     the assignment persisted as a partition column it is a partition-
     pruned scan, not a filter."""
-    d = dim_of(emb)
     probe = (
         centroids.crossJoin(F.broadcast(query))
         .select("centroid_id", cosine_col(F.col("ce"), F.col("qe")).alias("cos"))
@@ -525,11 +469,11 @@ def ivf_topk(
         .limit(n_probe)
         .select("centroid_id")
     )
-    assign = ivf_assign(emb, centroids, id_col, d=d)
+    assign = ivf_assign(emb, centroids, id_col)
     cand = emb.join(assign, on=id_col).join(
         F.broadcast(probe), on="centroid_id", how="left_semi"
     )
-    return brute_force_topk(cand, query, k, id_col, d=d)
+    return brute_force_topk(cand, query, k, id_col)
 
 
 def ivf_write_index(
@@ -710,9 +654,8 @@ def ivf_topk_batch(
     from pyspark.sql import Window
 
     narrow = scan_is_narrow(emb)
-    d = dim_of(emb)
-    probe = _probe_table(queries, centroids, n_probe, query_id_col, d=d)
-    assign = ivf_assign(emb, centroids, id_col, d=d)
+    probe = _probe_table(queries, centroids, n_probe, query_id_col)
+    assign = ivf_assign(emb, centroids, id_col)
     scored = None
     if narrow:
         # ID-closure fast path (batch-gated, same as the LSH verify):
@@ -748,7 +691,7 @@ def ivf_topk_batch(
         # join; with |cand| ~ |Q| x corpus x n_probe / n_centroids rows
         # the per-candidate work is then a single dot instead of
         # dot + 2 norms
-        corpus = emb.withColumn("_ne", norm_col_d(F.col("embedding"), d)).join(
+        corpus = emb.withColumn("_ne", norm_col(F.col("embedding"))).join(
             assign, on=id_col
         )
         if narrow:
@@ -766,7 +709,7 @@ def ivf_topk_batch(
     )
 
 
-def _probe_table(queries, centroids, n_probe, query_id_col, d=None):
+def _probe_table(queries, centroids, n_probe, query_id_col):
     """(query_id, qe, centroid_id): each query's n_probe nearest
     centroids, via a broadcast of the (small) centroid table."""
     from pyspark.sql import Window
@@ -775,9 +718,9 @@ def _probe_table(queries, centroids, n_probe, query_id_col, d=None):
     # (below the join, so the (query x centroid) product only pays the
     # dot); the probe rows also carry the query norm out so the
     # candidate scorer downstream never re-norms the query per pair
-    cent = centroids.withColumn("_nc", norm_col_d(F.col("ce"), d))
+    cent = centroids.withColumn("_nc", norm_col(F.col("ce")))
     return (
-        queries.withColumn("_nq", norm_col_d(F.col("qe"), d))
+        queries.withColumn("_nq", norm_col(F.col("qe")))
         .crossJoin(F.broadcast(cent))
         .select(
             query_id_col,
@@ -785,7 +728,7 @@ def _probe_table(queries, centroids, n_probe, query_id_col, d=None):
             "_nq",
             F.col("centroid_id"),
             (
-                dot_col_d(F.col("qe"), F.col("ce"), d)
+                dot_col(F.col("qe"), F.col("ce"))
                 / (F.col("_nq") * F.col("_nc"))
             ).alias("pcos"),
         )
@@ -827,8 +770,7 @@ def ivf_topk_batch_indexed(
     queries reads corpus/n_centroids x n_probed_partitions bytes."""
     from pyspark.sql import Window
 
-    d = dim_of(centroids, "ce")
-    probe = _probe_table(queries, centroids, n_probe, query_id_col, d=d)
+    probe = _probe_table(queries, centroids, n_probe, query_id_col)
     probed_ids = sorted(
         r["centroid_id"]
         for r in probe.select("centroid_id").distinct().collect()
@@ -862,7 +804,7 @@ def ivf_topk_batch_indexed(
             )
     if scored is None:
         corpus = spread_narrow_scan(idx).withColumn(
-            "_ne", norm_col_d(F.col("embedding"), d)
+            "_ne", norm_col(F.col("embedding"))
         )
         cand = corpus.join(probe, on="centroid_id")
         scored = _scored_candidates(cand, query_id_col, id_col)

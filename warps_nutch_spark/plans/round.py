@@ -92,12 +92,7 @@ class RoundDriver:
             cfg.host_buckets,
             compact_ratio=cfg.frontier_compact_ratio,
         )
-        seen_cls = BloomUrlSeen
-        if cfg.urlseen_backend == "cuckoo":
-            from ..store.cuckoo import CuckooUrlSeen
-
-            seen_cls = CuckooUrlSeen
-        self.urlseen = seen_cls(
+        self.urlseen = BloomUrlSeen(
             os.path.join(workdir, "urlseen"),
             cfg.bloom_partitions,
             cfg.bloom_capacity_per_partition,
@@ -157,9 +152,11 @@ class RoundDriver:
         each later job back-fills the earlier jobs' task tails (guide
         §2.6 — Spark schedules concurrent jobs FIFO inside one
         application). Callers pass only actions that are mutually
-        independent AND individually idempotent on resume; exceptions
-        propagate after all threads finish, so the stage's _DONE marker
-        is never written when any action failed.
+        independent AND individually idempotent on resume. Every action
+        runs even when another fails; the failures propagate after all
+        of them finish — one error unchanged, several together as a
+        ``BaseExceptionGroup`` — so the stage's _DONE marker is never
+        written when any action failed and no failure goes unreported.
 
         Overlap only pays when there IS a task tail to back-fill: on a
         near-single-core scheduler (e.g. one-core executors in the
@@ -167,22 +164,30 @@ class RoundDriver:
         on the same core and add scheduler/driver contention, so fall
         back to sequential execution there — scale-adaptive, not a
         local[32] constant."""
+        errors: list[BaseException] = []
         if self.spark.sparkContext.defaultParallelism < 4:
             for fn in fns:
-                fn()
-            return
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-            futures = [pool.submit(fn) for fn in fns]
-            errors: list[BaseException] = []
-            for fut in futures:
                 try:
-                    fut.result()
-                except BaseException as exc:  # propagate after joining all
+                    fn()
+                except Exception as exc:  # run the rest; an interrupt stops at once
                     errors.append(exc)
-        if errors:
+        else:
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+                futures = [pool.submit(fn) for fn in fns]
+                for fut in futures:
+                    try:
+                        fut.result()
+                    except BaseException as exc:  # propagate after joining all
+                        errors.append(exc)
+        if len(errors) == 1:
             raise errors[0]
+        if errors:
+            raise BaseExceptionGroup(
+                f"{len(errors)} of {len(fns)} overlapped stage actions failed",
+                errors,
+            )
 
     def _metrics_sum(self, batch_id: str, stage: str) -> int:
         """Sum of one committed metrics slice — the resume-path source
@@ -466,11 +471,6 @@ class RoundDriver:
             if not self._done(batch_id, "parse"):
                 if self._stage_data_ok(batch_id, "parse"):
                     parsed = self._read_stage(batch_id, "parse")  # resume: reuse
-                    if "bytes" in parsed.columns:
-                        # artifact from the pre-drop layout still carries the
-                        # payload bytes; keep the fetch artifact's copy as the
-                        # single source so the join below stays unambiguous
-                        parsed = parsed.drop("bytes")
                 else:
                     parsed = parse_op.parse(fetch_results, self.cfg, batch_id)
                     # the payload bytes already persist in the fetch
@@ -605,8 +605,9 @@ class RoundDriver:
                                 lineage,
                             )
                         except ValueError:
-                            # artifact from an older layout (no
-                            # host_bucket): fall back to the shuffling merge
+                            # artifact bucketed for another layout (e.g.
+                            # host_buckets changed between runs): fall
+                            # back to the shuffling merge, which rebuckets
                             self.store.merge(merge_rows, lineage)
                     stage_times["updatedb.adopt"] = time.time() - tt
 

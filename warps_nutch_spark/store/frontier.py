@@ -456,10 +456,7 @@ class ParquetFrontierStore(FrontierStore):
         deleted URL still probes maybe_seen=True — which routes it to
         the exact frontier anti-join, where it correctly shows as new
         and can be re-discovered. No invariant breaks (this is the
-        same path as any Bloom false positive). The cuckoo backend
-        (``store/cuckoo.py``, cfg.urlseen_backend="cuckoo") supports
-        true deletion — call its ``delete_round`` with the same keys
-        so the pre-screen's selectivity recovers too."""
+        same path as any Bloom false positive)."""
         base_v, _ = self._layout()
         schema = self.spark.read.parquet(self._data_dir(base_v)).schema
         has_host = "host" in keys.columns
